@@ -33,21 +33,21 @@ def entry(spark: SparkSession) -> DataFrame:
     guarded avg/stddev, nested to the reference's wire schema) over the
     events table at sf0.001.
 
-    Served via the single-shuffle explode(sequence) variant rather than
-    the built-in window() union: the 1h/10s window()'s 360-way Expand
-    exceeds janino's 64 KB method limit and silently falls back to
-    interpreted evaluation (observed in round-9 driver logs), while the
-    Generate-based plan stays inside whole-stage codegen with
-    bit-identical output (tests/test_plans.py
-    ::test_moving_stats_exploded_variant_agrees)."""
+    Served via the prefix-sum path rather than the built-in window()
+    union: the 1h/10s window()'s 360-way Expand exceeds janino's 64 KB
+    method limit and silently falls back to interpreted evaluation
+    (observed in round-9 run logs), while the prefix-sum plan has no
+    Expand and gives bit-identical output (tests/test_fast_path.py)."""
     from lab04_spark_streaming_spark.operators.moving_stats import (
-        moving_stats_exploded,
         nest_window_stats,
+    )
+    from lab04_spark_streaming_spark.operators.moving_stats_fast import (
+        moving_stats_flat_fast,
     )
     from lab04_spark_streaming_spark.sources.files import load_table
 
     events = load_table(spark, SMOKE_SF_DIR, "events")
-    flat = moving_stats_exploded(events, "ts", ["event_type"], "value")
+    flat = moving_stats_flat_fast(events, "ts", ["event_type"], "value")
     return nest_window_stats(flat, ["event_type"])
 
 

@@ -21,11 +21,9 @@ Scale notes (100 TB):
     not raw ticks. With D/S windows per row the state is D/S rows per
     key per window-kind — bounded, watermark-evicted in streaming.
   * The union of N aggs is N independent shuffles of the SAME input
-    scan; Spark reuses the scan via ReusedExchange under AQE. For very
-    large N, the explode-based variant (`moving_stats_exploded`) does
-    ONE shuffle by materializing the (row × window) expansion first —
-    trade bandwidth (D/S dup rows) for shuffle count. Both provided;
-    bench picks per workload.
+    scan; Spark reuses the scan via ReusedExchange under AQE. Long
+    windows (large D/S) are served by the prefix-sum path in
+    operators/moving_stats_fast.py, which never expands rows.
   * ``collect_list`` re-nesting shuffles on (timestamp, *keys); element
     order is non-deterministic so we ``sort_array`` for deterministic
     output (reference emits unsorted — documented deviation for
@@ -36,7 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.functions.guards import (
@@ -57,14 +55,6 @@ REFERENCE_WINDOWS: tuple[tuple[str, str], ...] = (
     ("1h", "1 hour"),
 )
 REFERENCE_SLIDE = "10 seconds"
-
-
-def parse_ticks(df: DataFrame, ts_col: str = "event_time") -> DataFrame:
-    """P2+P3: ISO8601 string → timestamp, drop unparseable rows
-    (reference: moving_statistic.py:44-46)."""
-    return df.withColumn(ts_col, F.to_timestamp(F.col(ts_col))).filter(
-        F.col(ts_col).isNotNull()
-    )
 
 
 def _stat_exprs(value_col: str, exact: bool):
@@ -126,68 +116,6 @@ def moving_stats_flat(
     return out
 
 
-def moving_stats_exploded(
-    df: DataFrame,
-    ts_col: str,
-    key_cols: Sequence[str],
-    value_col: str,
-    windows: Sequence[tuple[str, str]] = REFERENCE_WINDOWS,
-    slide: str = REFERENCE_SLIDE,
-) -> DataFrame:
-    """Single-shuffle variant of :func:`moving_stats_flat`.
-
-    Expands each row to its (label, window_end) memberships with an
-    inline array + explode (no UDF, no extra scan), then does ONE
-    groupBy. At 100 TB this replaces N shuffles of partial aggregates
-    with one shuffle of D/S-duplicated rows — wins when N is large or
-    the input scan is the bottleneck; see bench.py.
-
-    Semantically identical to the unioned variant (verified in tests).
-    """
-    slide_s = _duration_seconds(slide)
-    exploded = df.withColumn(
-        "_w",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(label).alias("label"),
-                        F.lit(_duration_seconds(dur)).alias("dur_s"),
-                    )
-                    for label, dur in windows
-                ]
-            )
-        ),
-    )
-    # Row with time t belongs to windows ending at e = ceil-to-grid
-    # offsets; enumerate ends e in (t, t + D] with e ≡ 0 (mod S).
-    exploded = exploded.withColumn(
-        "_end_epoch",
-        F.explode(
-            F.sequence(
-                (F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s) + 1) * slide_s,
-                F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s) * slide_s
-                + F.col("_w.dur_s"),
-                F.lit(slide_s),
-            )
-        ),
-    )
-    avg_e, std_e = _stat_exprs(value_col, exact=True)
-    return (
-        exploded.groupBy(
-            F.col("_end_epoch"), F.col("_w.label").alias("window"), *key_cols
-        )
-        .agg(avg_e, std_e)
-        .select(
-            F.col("_end_epoch").cast("timestamp").alias("timestamp"),
-            *key_cols,
-            "window",
-            "avg_value",
-            "std_value",
-        )
-    )
-
-
 def nest_window_stats(
     flat: DataFrame,
     key_cols: Sequence[str],
@@ -209,31 +137,9 @@ def nest_window_stats(
     )
 
 
-def moving_stats_nested(
-    df: DataFrame,
-    ts_col: str,
-    key_cols: Sequence[str],
-    value_col: str,
-    windows: Sequence[tuple[str, str]] = REFERENCE_WINDOWS,
-    slide: str = REFERENCE_SLIDE,
-) -> DataFrame:
-    """Full stage-2 shape: flat stats → nested array<struct> rows
-    (reference output schema, SURVEY.md §1.3 `btc-price-moving`)."""
-    flat = moving_stats_flat(df, ts_col, key_cols, value_col, windows, slide)
-    return nest_window_stats(flat, key_cols)
-
-
 def _duration_seconds(dur: str) -> int:
     """Parse '30 seconds' / '1 minute' / '1 hour' style durations."""
     n_str, unit = dur.split()
     n = int(n_str)
     unit = unit.rstrip("s")
     return n * {"second": 1, "minute": 60, "hour": 3600}[unit]
-
-
-def window_end_expr(ts: Column, slide_seconds: int) -> Column:
-    """Smallest slide-grid timestamp strictly greater than ``ts`` — the
-    end of the most recent window containing ``ts``. Used by the as-of
-    and exact-grid joins (operators/zscore.py)."""
-    epoch = F.unix_timestamp(ts)
-    return ((F.floor(epoch / slide_seconds) + 1) * slide_seconds).cast("timestamp")

@@ -6,17 +6,17 @@ explain()). Correct, but at 100 TB the shuffle carries
 rows × Σ(D_i/S) duplicates — the dominant cost of the reference
 pipeline's plan (measured: 48 s of a 77 s bench at sf0.1).
 
-This module computes identical results from per-slot prefix sums:
+This module computes identical results from per-slot prefix sums in
+two stages:
 
-  1. bucket   — ONE shuffle: groupBy (key, 10 s slot) → exact decimal
-                moments (n, Σv, Σv²). Output size is bounded by
-                time-range/slide × keys, INDEPENDENT of row count —
-                the crucial property at scale.
-  2. cumsum   — per-key running moments ordered by slot (window
-                function; one shuffle by key, partition-local sort).
-  3. probe    — any window [e−D, e) statistic is cum(e−1) − cum(e−1−D/S),
-                an as-of lookup into the sparse slot axis, implemented
-                as union + last_value(ignoreNulls) — still no expansion.
+  1. bucket — ONE shuffle: groupBy (key, 10 s slot) → exact decimal
+              moments (rows, n, Σv, Σv²). Output size is bounded by
+              time-range/slide × keys, INDEPENDENT of row count — the
+              crucial property at scale.
+  2. prefix — one ordered scan over buckets ∪ probes gives every probe
+              (key, slot) the running moments through its slot; any
+              window [e−D, e) statistic is then prefix(e−1) −
+              prefix(e−1−D/S). No expansion.
 
 avg/std derived from the same exact decimal moments as
 functions/guards.py, so results are bit-identical to the reference
@@ -38,12 +38,27 @@ from lab04_spark_streaming_spark.operators.moving_stats import (
 
 
 # Slot-range chunk width for parallel prefix scans. A per-key ordered
-# pass (cumsum / as-of fill) serializes on key cardinality — with few
-# keys and a long time axis most cores idle. Chunking by slot range
-# restores parallelism: each (key, chunk) sorts independently, and a
-# tiny per-chunk summary table (one row per chunk) carries the running
-# state across chunk boundaries. 16384 slots ≈ 1.9 days at 10 s.
+# scan serializes on key cardinality — with few keys and a long time
+# axis most cores idle. Chunking by slot range restores parallelism:
+# each (key, chunk) sorts independently, and a tiny per-chunk summary
+# table (one row per chunk) carries the running state across chunk
+# boundaries. 16384 slots ≈ 1.9 days at 10 s.
 CHUNK_SLOTS = 16384
+
+# Moment columns and the type of their running sums. The per-tick casts
+# in bucket_moments are the exact-moment types of
+# functions/guards.exact_avg/exact_std (decimal(30,4) for v,
+# decimal(30,8) for v²), so the sums are those of the naive path.
+# Running sums are held at precision 36 because Spark types the sum or
+# difference of two decimal(38,8) values as decimal(38,7), rounding a
+# digit away; from precision 36 a chunk carry-in plus a partial sum is
+# (37,·) and a window difference (38,·), both exact.
+_MOMENTS = {
+    "_rows": "bigint",
+    "_n": "bigint",
+    "_s": "decimal(36,4)",
+    "_sq": "decimal(36,8)",
+}
 
 
 def bucket_moments(
@@ -56,239 +71,129 @@ def bucket_moments(
     """Stage 1: exact moments per (key, slot). The only row-count-
     proportional shuffle in the pipeline (with map-side partial agg).
 
-    r15 (verdict stretch item — zscore per-ROW cost; guide §2.3
-    narrower types): the per-tick casts are decimal(18,*), not (30,*).
-    Same scale ⇒ same quantum ⇒ identical values, sums and final
-    doubles (exceptAll 0/0 both ways at sf0.1; oracle MATCH — the
-    DuckDB twin keeps DECIMAL(30,*)), but precision ≤ 18 keeps Spark's
-    Decimal COMPACT (long-backed: primitive adds in the partial agg
-    instead of BigDecimal allocations, 8-byte inline UnsafeRow storage
-    instead of variable-length bytes in the bucket shuffle).  Bounds:
-    ticks carry |value| ≤ ~600 (vs the 10^14 cast capacity) and the
-    SUM buffer widens to decimal(28,*) — a per-(key, 10 s slot) bucket
-    would need ~10^17 rows of max-magnitude values to overflow, and
-    ANSI mode makes any overflow a loud error, never a wrong answer.
-    Measured: zscore_asof_join 4.35 → 4.14 s interleaved median at
-    sf0.1 (±5%; the separate-session read was 5.62 → 4.79)."""
+    ``_rows`` counts every tick and ``_n`` the non-NULL values: a window
+    whose ticks all carry NULL values still exists (avg 0.0, std 0.0),
+    as it does for window(). Ticks with a NULL timestamp belong to no
+    window and are dropped."""
     v = F.col(value_col)
     return (
-        df.withColumn("_slot", F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s))
+        df.filter(F.col(ts_col).isNotNull())
+        .withColumn("_slot", F.floor(F.unix_timestamp(F.col(ts_col)) / slide_s))
         .groupBy(*key_cols, "_slot")
         .agg(
+            F.count(F.lit(1)).alias("_rows"),
             F.count(v).alias("_n"),
-            F.sum(v.cast("decimal(18,4)")).alias("_s"),
-            F.sum((v * v).cast("decimal(18,8)")).alias("_sq"),
+            F.sum(v.cast("decimal(30,4)")).alias("_s"),
+            F.sum((v * v).cast("decimal(30,8)")).alias("_sq"),
         )
     )
 
 
-def cumulative_moments(
+def _prefix_sum(c: Column, name: str) -> Column:
+    """``c`` cast to the running-sum type of moment ``name``; NULL (no
+    bucket yet) reads as zero."""
+    t = _MOMENTS[name]
+    return F.coalesce(c.cast(t), F.lit(0).cast(t))
+
+
+def prefix_moments(
     buckets: DataFrame,
-    key_cols: Sequence[str],
-    chunk_slots: int | None = None,
-) -> DataFrame:
-    """Stage 2: per-key running moments (decimal sums stay exact).
-
-    ``chunk_slots=None`` (default): one ordered window per key — the
-    cheapest plan when the slot axis is short, but it serializes on key
-    cardinality (5 keys → 5 busy cores no matter the cluster).
-
-    ``chunk_slots=N`` — chunk-parallel two-level prefix sum: each
-    (key, N-slot chunk) cumsums independently, and an exclusive running
-    total over the tiny per-chunk summary relation (one row per chunk)
-    is broadcast back as the chunk's carry-in, so parallelism follows
-    the time axis. Costs ~3 extra small stages — callers pick by their
-    known time span (see plans/reference_parity._stats_flat for the
-    same cost-based-picker pattern)."""
-    if chunk_slots is None:
-        w = (
-            Window.partitionBy(*key_cols)
-            .orderBy("_slot")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return buckets.select(
-            *key_cols,
-            "_slot",
-            F.sum("_n").over(w).alias("_cn"),
-            F.sum("_s").over(w).alias("_cs"),
-            F.sum("_sq").over(w).alias("_csq"),
-        )
-    # pin-bounded: occupied slots x keys (time-span, not tick count).
-    # Two consumers below (partial cumsum + per-chunk totals); the
-    # bucket relation is occupied-slot-sized, so a lazy lineage cut is
-    # cheap at any scale and halves the upstream scan/agg replay.
-    b = buckets.withColumn(
-        "_chunk", F.floor(F.col("_slot") / chunk_slots)
-    ).localCheckpoint(eager=False)
-    win = (
-        Window.partitionBy(*key_cols, "_chunk")
-        .orderBy("_slot")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    part = b.select(
-        *key_cols,
-        "_chunk",
-        "_slot",
-        F.sum("_n").over(win).alias("_cn"),
-        F.sum("_s").over(win).alias("_cs"),
-        F.sum("_sq").over(win).alias("_csq"),
-    )
-    totals = b.groupBy(*key_cols, "_chunk").agg(
-        F.sum("_n").alias("_tn"),
-        F.sum("_s").alias("_ts"),
-        F.sum("_sq").alias("_tsq"),
-    )
-    cw = (
-        Window.partitionBy(*key_cols)
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = totals.select(
-        *key_cols,
-        "_chunk",
-        F.coalesce(F.sum("_tn").over(cw), F.lit(0)).alias("_kn"),
-        F.coalesce(
-            F.sum("_ts").over(cw), F.lit(0).cast(totals.schema["_ts"].dataType)
-        ).alias("_ks"),
-        F.coalesce(
-            F.sum("_tsq").over(cw), F.lit(0).cast(totals.schema["_tsq"].dataType)
-        ).alias("_ksq"),
-    )
-    return part.join(F.broadcast(carry), [*key_cols, "_chunk"]).select(
-        *key_cols,
-        "_slot",
-        (F.col("_cn") + F.col("_kn")).alias("_cn"),
-        (F.col("_cs") + F.col("_ks")).alias("_cs"),
-        (F.col("_csq") + F.col("_ksq")).alias("_csq"),
-    )
-
-
-def asof_cum_lookup(
-    cums: DataFrame,
     probes: DataFrame,
     key_cols: Sequence[str],
     chunk_slots: int | None = None,
 ) -> DataFrame:
-    """For each probe (key, slot) return the cumulative moments through
-    that slot (zeros when no bucket precedes it), preserving any extra
-    payload columns the probe rows carry. Union + ordered
-    last_value(ignoreNulls) — no expansion.
+    """Stage 2: for each probe (key, slot), the running sums of the
+    bucket moments over the key's buckets at slots ≤ the probe's slot
+    (zeros before the first bucket), under the moment column names and
+    with the probe's extra payload columns kept.
 
-    ``chunk_slots=None``: one fill pass per key (serializes on key
+    One ordered scan over buckets ∪ probes: probe rows carry NULL
+    moments, and a bucket sorts before a probe at the same slot so the
+    sum through a probe includes its own slot.
+
+    ``chunk_slots=None``: one ordered scan per key (serializes on key
     cardinality — fine for short slot axes). ``chunk_slots=N``: each
-    (key, N-slot chunk) fills independently in parallel; probes that
-    precede their chunk's first bucket are patched from a per-chunk
-    carry (the last bucket cum of any earlier chunk — an exclusive
-    running window over the tiny one-row-per-chunk summary relation,
-    broadcast back), so parallelism follows the time axis."""
-    cum_cols = ("_cn", "_cs", "_csq")
-    cum_types = {c: cums.schema[c].dataType for c in cum_cols}
+    (key, N-slot chunk) scans independently, and an exclusive running
+    sum over the per-(key, chunk) totals (one row per chunk, probe-only
+    chunks included) is broadcast back as the chunk's carry-in, so
+    parallelism follows the time axis."""
     pay = [
-        (f.name, f.dataType)
-        for f in probes.schema.fields
-        if f.name not in (*key_cols, "_slot")
+        f for f in probes.schema.fields if f.name not in (*key_cols, "_slot")
     ]
-
-    b_side = cums.select(
+    slot = F.col("_slot").cast("long").alias("_slot")
+    u = buckets.select(
         *key_cols,
-        F.col("_slot").cast("long").alias("_slot"),
+        slot,
         F.lit(1).alias("_isb"),
-        *cum_cols,
-        *[F.lit(None).cast(t).alias(n) for n, t in pay],
-    )
-    p_side = probes.select(
-        *key_cols,
-        F.col("_slot").cast("long").alias("_slot"),
-        F.lit(0).alias("_isb"),
-        *[F.lit(None).cast(cum_types[c]).alias(c) for c in cum_cols],
-        *[F.col(n) for n, _ in pay],
-    )
-    zero = {c: F.lit(0).cast(cum_types[c]) for c in cum_cols}
-
-    if chunk_slots is None:
-        # _isb desc orders a bucket BEFORE probes at the same slot: the
-        # as-of is ≤, so a bucket at the probe slot counts.
-        w = (
-            Window.partitionBy(*key_cols)
-            .orderBy(F.col("_slot"), F.col("_isb").desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
+        *[F.col(c).cast(t).alias(c) for c, t in _MOMENTS.items()],
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in pay],
+    ).unionByName(
+        probes.select(
+            *key_cols,
+            slot,
+            F.lit(0).alias("_isb"),
+            *[F.lit(None).cast(t).alias(c) for c, t in _MOMENTS.items()],
+            *[f.name for f in pay],
         )
-        return (
-            b_side.unionByName(p_side)
-            .select(
-                *key_cols,
-                "_slot",
-                "_isb",
-                *[
-                    F.coalesce(
-                        F.last(c, ignorenulls=True).over(w), zero[c]
-                    ).alias(c)
-                    for c in cum_cols
-                ],
-                *[n for n, _ in pay],
-            )
-            .filter(F.col("_isb") == 0)
-            .drop("_isb")
-        )
-
-    # pin-bounded: slot/probe rows (time-span, not tick count).
-    # Consumed by the fill window AND the chunk-domain distinct —
-    # cut lineage once.
-    u = (
-        b_side.unionByName(p_side)
-        .withColumn("_chunk", F.floor(F.col("_slot") / chunk_slots))
-        .localCheckpoint(eager=False)
     )
+    part_by = list(key_cols)
+    if chunk_slots is not None:
+        u = u.withColumn("_chunk", F.floor(F.col("_slot") / chunk_slots))
+        part_by.append("_chunk")
     w = (
-        Window.partitionBy(*key_cols, "_chunk")
+        Window.partitionBy(*part_by)
         .orderBy(F.col("_slot"), F.col("_isb").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    filled = u.select(
-        *key_cols,
+    scanned = u.select(
+        *part_by,
         "_slot",
-        "_chunk",
         "_isb",
-        *[F.last(c, ignorenulls=True).over(w).alias(c) for c in cum_cols],
-        *[n for n, _ in pay],
+        *[_prefix_sum(F.sum(c).over(w), c).alias(c) for c in _MOMENTS],
+        *[f.name for f in pay],
     ).filter(F.col("_isb") == 0)
+    if chunk_slots is None:
+        return scanned.drop("_isb")
 
-    summ = (
-        cums.withColumn("_chunk", F.floor(F.col("_slot") / chunk_slots))
-        .groupBy(*key_cols, "_chunk")
-        .agg(F.max(F.struct("_slot", *cum_cols)).alias("_m"))
-    )
-    chunk_domain = u.select(*key_cols, "_chunk").distinct()
     cw = (
         Window.partitionBy(*key_cols)
         .orderBy("_chunk")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    carry = chunk_domain.join(summ, [*key_cols, "_chunk"], "left_outer").select(
-        *key_cols,
-        "_chunk",
-        F.last("_m", ignorenulls=True).over(cw).alias("_carry"),
+    carry = (
+        u.groupBy(*part_by)
+        .agg(*[F.sum(c).alias(c) for c in _MOMENTS])
+        .select(
+            *part_by,
+            *[
+                _prefix_sum(F.sum(c).over(cw), c).alias(f"_k{c}")
+                for c in _MOMENTS
+            ],
+        )
     )
-    return filled.join(F.broadcast(carry), [*key_cols, "_chunk"]).select(
+    return scanned.join(F.broadcast(carry), part_by).select(
         *key_cols,
         "_slot",
         *[
-            F.coalesce(F.col(c), F.col(f"_carry.{c}"), zero[c]).alias(c)
-            for c in cum_cols
+            _prefix_sum(F.col(c) + F.col(f"_k{c}"), c).alias(c)
+            for c in _MOMENTS
         ],
-        *[n for n, _ in pay],
+        *[f.name for f in pay],
     )
 
 
-def _stats_from_moment_diff(n: Column, s: Column, sq: Column) -> tuple[Column, Column]:
-    """avg/std from moment differences — the exact same arithmetic as
-    functions/guards.exact_avg/exact_std, so results are bit-identical."""
+def _window_stats(hi: str, lo: str) -> tuple[Column, Column, Column]:
+    """(rows, avg, std) of the window between the prefix moments named
+    ``{lo}{moment}`` and ``{hi}{moment}`` — the exact same arithmetic
+    as functions/guards.exact_avg/exact_std, so results are
+    bit-identical. A window exists where rows > 0."""
+    rows, n, s, sq = (F.col(f"{hi}{c}") - F.col(f"{lo}{c}") for c in _MOMENTS)
     sd = s.cast("double")
     sqd = sq.cast("double")
     avg = F.when(n == 0, F.lit(0.0)).otherwise(sd / n)
     var = (sqd - sd * sd / n) / (n - F.lit(1))
     std = F.when(n <= 1, F.lit(0.0)).otherwise(F.sqrt(F.greatest(var, F.lit(0.0))))
-    return avg, std
+    return rows, avg, std
 
 
 def moving_stats_flat_fast(
@@ -302,16 +207,19 @@ def moving_stats_flat_fast(
 ) -> DataFrame:
     """Prefix-sum equivalent of operators/moving_stats.moving_stats_flat
     (bit-identical output, asserted in tests). Instead of expanding
-    every ROW into Σ(D/S) window memberships, candidate window ends are
-    enumerated from each key's [min_slot, max_slot] range — work bounded
-    by time-range/slide × keys × windows, independent of row count.
+    every ROW into Σ(D/S) window memberships, every slot of each key's
+    [min_slot − Dmax, max_slot + Dmax) range is probed once — work
+    bounded by time-range/slide × keys × windows, independent of row
+    count. The window ending at slot p + 1 is prefix(p) − prefix(p − D),
+    and because the probes are consecutive slots, prefix(p − D) is the
+    probe D rows back: a lag, not a join.
 
-    Both ordered passes (cumsum, as-of fill) are slot-range chunked
-    (CHUNK_SLOTS two-level scans), so parallelism follows the time axis
-    rather than the key cardinality."""
+    ``chunk_slots`` chunks the prefix scan by slot range (see
+    prefix_moments) so parallelism follows the time axis rather than
+    the key cardinality."""
     buckets = bucket_moments(df, ts_col, key_cols, value_col, slide_s)
-    cums = cumulative_moments(buckets, key_cols, chunk_slots=chunk_slots)
-    dmax = max(_duration_seconds(d) // slide_s for _, d in windows)
+    dslots = [(label, _duration_seconds(dur) // slide_s) for label, dur in windows]
+    dmax = max(d for _, d in dslots)
 
     bounds = buckets.groupBy(*key_cols).agg(
         F.min("_slot").alias("_lo"), F.max("_slot").alias("_hi")
@@ -322,56 +230,43 @@ def moving_stats_flat_fast(
             F.sequence(F.col("_lo") - dmax, F.col("_hi") + dmax - 1)
         ).alias("_slot"),
     )
-    looked = asof_cum_lookup(cums, probes, key_cols, chunk_slots=chunk_slots)
-
-    wspec = ", ".join(
-        f"struct('{label}' as label, {_duration_seconds(dur) // slide_s} as dslots)"
-        for label, dur in windows
-    )
-    ends = (
-        bounds.withColumn("_w", F.explode(F.expr(f"array({wspec})")))
-        .select(
-            *key_cols,
-            F.col("_w.label").alias("window"),
-            F.col("_w.dslots").alias("_dslots"),
-            F.explode(
-                F.sequence(F.col("_lo") + 1, F.col("_hi") + F.col("_w.dslots"))
-            ).alias("_end"),
-        )
-    )
-    hi = looked.select(
+    pre = prefix_moments(buckets, probes, key_cols, chunk_slots=chunk_slots)
+    # A NULL lag (fewer than D probes back) lies before the key's first
+    # bucket: that window is empty and the rows > 0 filter drops it.
+    back = Window.partitionBy(*key_cols).orderBy("_slot")
+    lagged = pre.select(
         *key_cols,
-        F.col("_slot").alias("_hi_slot"),
-        F.col("_cn").alias("_hn"),
-        F.col("_cs").alias("_hs"),
-        F.col("_csq").alias("_hsq"),
+        "_slot",
+        *[F.col(c).alias(f"_h{c}") for c in _MOMENTS],
+        *[
+            F.lag(c, d).over(back).alias(f"_l{i}{c}")
+            for i, (_, d) in enumerate(dslots)
+            for c in _MOMENTS
+        ],
     )
-    lo = looked.select(
+    per_window = lagged.select(
         *key_cols,
-        F.col("_slot").alias("_lo_slot"),
-        F.col("_cn").alias("_ln"),
-        F.col("_cs").alias("_ls"),
-        F.col("_csq").alias("_lsq"),
+        "_slot",
+        *[f"_h{c}" for c in _MOMENTS],
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(label).alias("window"),
+                        *[F.col(f"_l{i}{c}").alias(f"_l{c}") for c in _MOMENTS],
+                    )
+                    for i, (label, _) in enumerate(dslots)
+                ]
+            )
+        ),
     )
-    j = (
-        ends.withColumn("_hi_slot", F.col("_end") - 1)
-        .withColumn("_lo_slot", F.col("_end") - 1 - F.col("_dslots"))
-        .join(hi, [*key_cols, "_hi_slot"])
-        .join(lo, [*key_cols, "_lo_slot"])
-    )
-    n = F.col("_hn") - F.col("_ln")
-    s = F.col("_hs") - F.col("_ls")
-    sq = F.col("_hsq") - F.col("_lsq")
-    avg, std = _stats_from_moment_diff(n, s, sq)
-    return (
-        j.filter(n > 0)
-        .select(
-            (F.col("_end") * slide_s).cast("timestamp").alias("timestamp"),
-            *key_cols,
-            "window",
-            avg.alias("avg_value"),
-            std.alias("std_value"),
-        )
+    rows, avg, std = _window_stats("_h", "_l")
+    return per_window.filter(rows > 0).select(
+        ((F.col("_slot") + 1) * slide_s).cast("timestamp").alias("timestamp"),
+        *key_cols,
+        "window",
+        avg.alias("avg_value"),
+        std.alias("std_value"),
     )
 
 
@@ -391,61 +286,29 @@ def zscore_asof_fast(
     against the most recent non-empty window ending ≤ the tick's slot
     (falling back ≤ ``max_stale_slots``).
 
-    Every cumulative moment a tick needs lives at a fixed slot offset:
-    for staleness s the window ending at slot e−s covers cum(e−1−s) −
-    cum(e−1−s−D/S). The distinct offsets across all windows × stales
-    (2 + 2·|windows| by default) become one probe row each, and a
-    single as-of fill resolves them all:
+    Every prefix moment a tick needs lives at a fixed slot offset: for
+    staleness s the window ending at slot e−s covers prefix(e−1−s) −
+    prefix(e−1−s−D/S). The distinct offsets across all windows × stales
+    (2 + 2·|windows| by default) become one probe row each:
 
-      1. bucket    — ONE row-count-proportional shuffle → exact decimal
-                     moments per (key, slot).
-      2. cumsum    — per-key running moments (output bounded by
-                     occupied slots, not rows).
-      3. union-fill — probe rows for the DISTINCT (key, end-slot) pairs
-                     (not per tick: every tick in a slot needs the same
-                     lookups, so fill work scales with occupied slots ×
-                     offsets and is INDEPENDENT of tick density — the
-                     property that matters at 100 TB) union the sparse
-                     cum rows; one ordered last_value(ignoreNulls) pass
-                     gives every probe its as-of cum.
-      4. pivot+join — per-(key, end-slot) hash agg collapses the probe
-                     rows to one struct per offset; window stats are
-                     moment differences, freshest non-empty staleness
-                     wins; explode emits a (key, end-slot, window) stats
-                     relation that ticks join on (key, end-slot) — both
-                     sides hash-partitioned on the same key, one
-                     shuffle each.
+      1. bucket   — ONE row-count-proportional shuffle → exact decimal
+                    moments per (key, slot).
+      2. prefix   — probe rows for the DISTINCT (key, end-slot) pairs
+                    (not per tick: every tick in a slot needs the same
+                    lookups, so the scan is bounded by occupied slots ×
+                    offsets and is INDEPENDENT of tick density — the
+                    property that matters at 100 TB) get their running
+                    moments from one scan over buckets ∪ probes
+                    (prefix_moments, slot-range chunked by
+                    ``chunk_slots``).
+      3. assemble — window moments are hi − lo differences of resolved
+                    probes, the freshest non-empty staleness wins, and
+                    ticks join the (key, end-slot, window) stats on
+                    (key, end-slot).
 
-    The fill pass is slot-range chunked (CHUNK_SLOTS): each (key,
-    chunk) fills independently and a per-chunk carry (last bucket cum
-    before the chunk — a tiny summary window) patches probes that
-    precede their chunk's first bucket, so parallelism scales with the
-    time axis instead of the key count. Output verified bit-equal to
-    the naive operator (tests/test_fast_path.py) and to the DuckDB
-    oracle."""
+    Output verified bit-equal to the naive operator
+    (tests/test_fast_path.py) and to the DuckDB oracle."""
     buckets = bucket_moments(ticks, ts_col, key_cols, value_col, slide_s)
-    # cums feeds the fill union AND the per-chunk carry summary (and the
-    # whole subtree is consumed twice again via the hi/lo split below) —
-    # without lineage cuts the plan replayed the parquet scan 34 times
-    # at sf0.1 (0 ReusedExchange: exchange reuse does not fire across
-    # these differently-shaped subtrees). Occupied-slot-sized → cheap to
-    # materialize at any scale.
-    # pin-bounded: occupied slots x keys x offsets, see below.
-    # Pin-storage audit (r12 triage): every pin on this path (cums,
-    # resolved, the chunked fill union) is BOUNDED by occupied slots x
-    # keys x offsets — independent of tick count (the 1000x probe ran
-    # 1000x the events in 5.3x the time, exponent 0.24, with these pins
-    # deserialized). They stay at the fast deserialized default: the
-    # relations are read 2-4x each on the flagship hot path, and they
-    # grow only with the TIME SPAN (slots), which the chunked two-level
-    # prefix scan already partitions; a year-long span at 10 s slides
-    # is ~3.2M slots x keys — still far from the ~120M-row pin size
-    # that forced wave9's serialized conversion.
-    # pin-bounded: occupied slots x keys (see audit note above)
-    cums = cumulative_moments(
-        buckets, key_cols, chunk_slots=chunk_slots
-    ).localCheckpoint(eager=False)
-    cum_cols = ("_cn", "_cs", "_csq")
 
     offs = sorted(
         {1 + st for st in range(max_stale_slots + 1)}
@@ -478,11 +341,13 @@ def zscore_asof_fast(
         .withColumn("_off", F.explode(F.array(*[F.lit(o) for o in offs])))
         .withColumn("_slot", (F.col("_end0") - F.col("_off")).cast("long"))
     )
-    # pin-bounded: probes × offsets rows (slot-bounded) — hi and lo
-    # both consume the resolved probes; cut lineage so the fill pass
-    # runs once.
-    resolved = asof_cum_lookup(
-        cums, probes, key_cols, chunk_slots=chunk_slots
+    # pin-bounded: probes × offsets rows (occupied slots, not ticks) —
+    # hi and lo both consume the resolved probes; cut lineage so the
+    # prefix scan runs once. Deserialized default storage: the pin
+    # grows only with the time span (a year at 10 s slides is ~3.2M
+    # slots × keys × offsets).
+    resolved = prefix_moments(
+        buckets, probes, key_cols, chunk_slots=chunk_slots
     ).localCheckpoint(eager=False)
 
     # Assemble window stats RELATIONALLY instead of via a wide pivoted
@@ -499,7 +364,7 @@ def zscore_asof_fast(
         *key_cols,
         "_end0",
         (F.col("_off") - 1).alias("_st"),
-        *[F.col(c).alias(f"_h{c[1:]}") for c in cum_cols],
+        *[F.col(c).alias(f"_h{c}") for c in _MOMENTS],
     )
     # _off → (window label, staleness) decode for the lo side
     # (off = 1 + st + dslots). NOT injective in general — two windows
@@ -523,20 +388,17 @@ def zscore_asof_fast(
         "_end0",
         "window",
         "_st",
-        *[F.col(c).alias(f"_l{c[1:]}") for c in cum_cols],
+        *[F.col(c).alias(f"_l{c}") for c in _MOMENTS],
     )
     j = hi.join(lo, [*key_cols, "_end0", "_st"])
-    n = F.col("_hcn") - F.col("_lcn")
-    s = F.col("_hcs") - F.col("_lcs")
-    sq = F.col("_hcsq") - F.col("_lcsq")
-    avg, std = _stats_from_moment_diff(n, s, sq)
+    rows, avg, std = _window_stats("_h", "_l")
     # Freshest (smallest staleness) non-empty window per (key, slot,
     # window). The join partitions on (key, _end0, _st) while this groupBy
     # clusters on (key, _end0, window), so Spark inserts one more exchange
     # here — acceptable because the input is already reduced to
     # occupied-slot size (probes × windows, not raw events).
     stats = (
-        j.filter(n > 0)
+        j.filter(rows > 0)
         .select(
             *key_cols,
             "_end0",

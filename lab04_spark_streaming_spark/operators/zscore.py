@@ -1,8 +1,10 @@
 """Stage-3 operator: z-score of each tick against its moving statistics.
 
-Re-expression of the reference's ``zscore_calculator.py``: flatten the
-nested stats (``explode``, N2-N3), inner equi-join ticks to stats on
-(time, key) (T4), compute the guarded z-score (P4/P8), re-nest (A2).
+Re-expression of the reference's ``zscore_calculator.py``: inner
+equi-join ticks to the flat stats on (time, key) (T4), compute the
+guarded z-score (P4/P8), re-nest (A2). Stage 2's flat output feeds
+this stage directly, so the reference's explode of nested stats
+(N2-N3) has no counterpart here.
 
 Two join semantics are provided:
 
@@ -38,22 +40,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lab04_spark_streaming_spark.functions.guards import safe_zscore
-
-
-def flatten_window_stats(nested: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """N2+N3: array<struct> stats → one flat row per window entry
-    (reference: zscore_calculator.py:84-97)."""
-    return nested.select(
-        "timestamp",
-        *key_cols,
-        F.explode(F.col("windows")).alias("window_data"),
-    ).select(
-        "timestamp",
-        *key_cols,
-        F.col("window_data.window").alias("window"),
-        F.col("window_data.avg_value").alias("avg_value"),
-        F.col("window_data.std_value").alias("std_value"),
-    )
 
 
 def zscore_exact_grid(

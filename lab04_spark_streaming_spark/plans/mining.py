@@ -953,12 +953,12 @@ shf AS (
   HAVING COUNT(*) BETWEEN 2 AND {_KCORE_DF_CAP}
 ),
 exf AS (SELECT ex.doc_id, ex.sh FROM ex JOIN shf USING (sh)),
-e0 AS (
+e0 AS MATERIALIZED (
   SELECT a.doc_id AS src, b.doc_id AS dst
   FROM exf a JOIN exf b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY 1, 2 HAVING COUNT(*) >= {_KCORE_MIN_SHARED}
 ),
-adj AS (SELECT src AS u, dst AS v FROM e0
+adj AS MATERIALIZED (SELECT src AS u, dst AS v FROM e0
         UNION ALL SELECT dst, src FROM e0)"""
 
 

@@ -121,7 +121,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact integer arithmetic end-to-end (token counts, cumulative sum),
     so the oracle matches bit-for-bit. Scale: one shuffle on source +
     a per-source ordered cumsum. At 100 TB the cumsum is the same
-    two-level chunked scan used in moving_stats_fast.cumulative_moments
+    two-level chunked scan used in moving_stats_fast.prefix_moments
     (chunk by doc_id range, per-chunk totals, tiny carry relation), so
     parallelism follows corpus position, not the source count."""
     d = _docs(spark, sf_dir).select(

@@ -112,11 +112,8 @@ def _stats_flat(
     (4.5 s vs 10.6 s), the 6-window set favors prefix sums (2.7 s vs
     15.2 s) — so pick by the expansion factor Σ(D/S)."""
     from lab04_spark_streaming_spark.operators.moving_stats_fast import (
-        moving_stats_flat_fast,
-    )
-
-    from lab04_spark_streaming_spark.operators.moving_stats_fast import (
         CHUNK_SLOTS,
+        moving_stats_flat_fast,
     )
 
     ev = _events(spark, sf_dir, until)
@@ -133,46 +130,17 @@ def _stats_flat(
             windows=_spark_windows(windows),
             chunk_slots=None if until else CHUNK_SLOTS,
         )
-    # r14 optimization, RE-ADJUDICATED by the standing probe-on-change
-    # rule: an earlier r14 session served this branch via
-    # moving_stats_exploded over a round-robin repartition (sf0.1
-    # median 1.07 s vs the union's 2.07 in the same session), but the
-    # 10x probe read exponent 1.12 (14.4 s) against the union's flat
-    # history (0.15/0.14/0.40 across three decades) and the timings
-    # were erratic (3.4-23 s swings): the exploded form's sequence()
-    # explode ALLOCATES an array per input row (GC-bound at x39
-    # expansion), and the keyless repartition pays round-robin's
-    # sort-before-repartition (guide §2.5).  The window() union expands
-    # through allocation-free codegen Expand — measured stable and
-    # fastest at every probed tier — so it serves again, over a
-    # DETERMINISTIC-hash split restoration (guide §2.5 input skew /
-    # SPARK-38388) applied only when the scan cannot feed the cores
-    # (the one-row-group local fixture; at cluster scale inputs arrive
-    # with parts >= cores and this is a no-op).  AQE exchange reuse
-    # dedups the three branch subtrees to one shuffle write.
-    # r15 (ADVICE): hash the unique event_id directly — pmod(xxhash64,
-    # cores*100) collapsed the hash space to cores*100 buckets, adding
-    # ~10% expected partition-size variance for no benefit.  The guard
-    # (repartition only when the scan cannot feed the cores) now lives
-    # in the shared restore_splits helper.
-    #
-    # r15 (verdict item 5, measured): the split restoration is applied
-    # only to the UNBOUNDED full-table case.  For an `until`-bounded
-    # slice (nested's week) the repartition's extra exchange + barrier
-    # costs more than the single-split expand it parallelizes — 5-run
-    # sf0.1 medians: nested 2.46 with the repartition vs 1.66 without
-    # (the r13 shape the driver read at 1.95 s); flat (full month)
-    # keeps it per the r14 A/B (1.90 vs 2.07).  At cluster scale both
-    # branches are no-ops (multi-split inputs).
-    #
-    # A single-exchange "onepass" union variant (window() Expand in a
-    # projection, union BEFORE one groupBy) was built, measured and
-    # REJECTED this round: sf0.1 flat 2.10 -> 1.95 and nested 2.33 ->
-    # 1.85 looked good, but the same-fixture 100x A/B read 40.6 s vs
-    # the union's 13.4 s (exponent 0.64 vs 0.33) — the merged
-    # Union(Expand x3/x6/x30) map stage loses the per-leg codegen the
-    # separate aggregation legs get.  The union's committed probe
-    # history (0.15/0.14/0.40 across three decades) stands.
+    # Short windows: the window() union. Each window is its own
+    # aggregation leg, and its Expand stays allocation-free inside
+    # whole-stage codegen; it measured fastest and scaled flattest of
+    # the variants tried. Two were rejected: the exploded variant
+    # (explode(sequence) allocates an array per input row, 10x exponent
+    # 1.12 against the union's 0.15-0.40) and a single-exchange
+    # "onepass" union (100x: 40.6 s against 13.4 s; the merged
+    # Union(Expand) map stage loses per-leg codegen). The full-table
+    # scan is split-restored only when it cannot feed the cores; an
+    # `until`-bounded slice skips it, as the extra exchange costs more
+    # than it parallelizes there.
     if until is None:
         ev = restore_splits(ev, "event_id")
     return moving_stats_flat(
@@ -357,7 +325,7 @@ def q_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     An arrival-order running max is inherently sequential, but a bare
     ``Window.orderBy(event_id)`` funnels the whole table through ONE
-    task. Same cure as moving_stats_fast.cumulative_moments: chunk the
+    task. Same cure as moving_stats_fast.prefix_moments: chunk the
     id axis — each event_id-range chunk computes its local running max
     in parallel, a tiny per-chunk summary relation (one row per chunk)
     carries the exclusive prefix max across chunk boundaries, and

@@ -465,39 +465,6 @@ def cms_counters(df: DataFrame, depth: int = 4, width: int = 256) -> DataFrame:
     )
 
 
-def join_streams_left_outer(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    left_ts: str,
-    right_ts: str,
-    tolerance: str = "30 seconds",
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER equi-join with an event-time band —
-    the join mode the inner stage-3 join (stage3_zscore) can't cover:
-    a left row with no right match within ±tolerance is still emitted
-    (right side NULL) once the watermark passes its eligibility bound.
-    Both watermarks plus the time-range predicate are REQUIRED — they
-    are what lets Spark expire join state and know when an unmatched
-    left row can never match, bounding state by rate × (tolerance +
-    watermark) instead of the whole stream. The canonical enrich-
-    without-dropping shape: ticks tagged with a slow side-channel
-    (trade flags, quality labels) that may simply be absent."""
-    lw = left.withWatermark(left_ts, watermark)
-    rw = right.withWatermark(right_ts, watermark)
-    cond = (
-        (lw[key_col] == rw[key_col])
-        & (rw[right_ts] >= F.expr(f"{left_ts} - interval {tolerance}"))
-        & (rw[right_ts] <= F.expr(f"{left_ts} + interval {tolerance}"))
-    )
-    return lw.join(rw, cond, "leftOuter").select(
-        lw[key_col].alias(key_col),
-        lw[left_ts].alias(left_ts),
-        *[c for c in rw.columns if c != key_col],
-    )
-
-
 def hll_dau_stream(
     stream: DataFrame,
     ts_col: str = "ts",

@@ -83,33 +83,13 @@ def test_dedup_shuffle_carries_hash_not_text(spark, sf_dir):
     assert ex and all("text" not in l for l in ex)
 
 
-def test_moving_stats_exploded_variant_agrees(spark, sf_dir):
-    """The single-shuffle exploded variant (operators/moving_stats.py)
-    must agree with the unioned variant."""
-    from lab04_spark_streaming_spark.operators.moving_stats import (
-        moving_stats_exploded,
-        moving_stats_flat,
-    )
-
-    ev = load_table(spark, sf_dir, "events").limit(500)
-    a = {
-        (r.timestamp, r.event_type, r.window): (r.avg_value, r.std_value)
-        for r in moving_stats_flat(ev, "ts", ["event_type"], "value").collect()
-    }
-    b = {
-        (r.timestamp, r.event_type, r.window): (r.avg_value, r.std_value)
-        for r in moving_stats_exploded(ev, "ts", ["event_type"], "value").collect()
-    }
-    assert a == b
-
-
 def test_entry_plan_has_no_wide_expand(spark):
     """The flagship entry() plan must contain NO Expand node: the
     6-window union's 1h/10s window() expands 360-way, whose generated
     switch-case exceeds janino's 64 KB method limit and silently falls
     back to interpreted evaluation (r9 driver logs) — entry() therefore
-    serves the same bit-identical result through explode(sequence)
-    (Generate), which stays inside whole-stage codegen."""
+    serves the same bit-identical result from the prefix-sum path,
+    whose slot enumeration is an explode(sequence) (Generate)."""
     import __spark_entry__ as e
 
     plan = plan_of(e.entry(spark))

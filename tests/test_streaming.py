@@ -692,8 +692,10 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
     """Outer stream-stream join: matched left rows carry the right
     value; unmatched left rows must STILL emit (NULL right columns)
     once the watermark passes their join band — the semantics the
-    inner stage-3 join cannot give. Verified against the identical
-    batch left join."""
+    inner stage-3 join cannot give. The sentinels arrive in a second
+    file, one file per trigger, so the unmatched rows are emitted by a
+    later micro-batch than the one that read them. Verified against
+    the identical batch left join."""
     from lab04_spark_streaming_spark.streaming.pipeline import (
         memory_sink_once,
         stream_stream_outer_join,
@@ -707,21 +709,25 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
         ("A", at(20), 2.0),   # no right partner
         ("B", at(10), 3.0),
         ("C", at(30), 4.0),   # key absent on the right entirely
-        ("A", at(500), 9.9),  # sentinel: advances both watermarks
     ]
     right_rows = [
         ("A", at(10), 100.0),
         ("B", at(12), 300.0),  # inside the +/-5s band of B@10
         ("B", at(25), 301.0),  # outside every band
-        ("Z", at(500), 0.0),   # sentinel
     ]
+    # sentinels, in a second file per side: advance both watermarks
+    left_late = [("A", at(500), 9.9)]
+    right_late = [("Z", at(500), 0.0)]
     lp, rp = str(tmp_path / "ssl"), str(tmp_path / "ssr")
-    spark.createDataFrame(
-        left_rows, "sym string, ts timestamp, px double"
-    ).coalesce(1).write.parquet(lp)
-    spark.createDataFrame(
-        right_rows, "sym string, rts timestamp, stat double"
-    ).coalesce(1).write.parquet(rp)
+    for rows, path, ddl in (
+        (left_rows, lp, "sym string, ts timestamp, px double"),
+        (left_late, lp, "sym string, ts timestamp, px double"),
+        (right_rows, rp, "sym string, rts timestamp, stat double"),
+        (right_late, rp, "sym string, rts timestamp, stat double"),
+    ):
+        spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
 
     from pyspark.sql.types import (
         DoubleType,
@@ -746,8 +752,8 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
         ]
     )
     out = stream_stream_outer_join(
-        file_stream(spark, lp, ls),
-        file_stream(spark, rp, rs),
+        file_stream(spark, lp, ls, max_files_per_trigger=1),
+        file_stream(spark, rp, rs, max_files_per_trigger=1),
         on=["sym"],
         l_ts="ts",
         r_ts="rts",
@@ -762,8 +768,8 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
     }
 
     batch_out = stream_stream_outer_join(
-        spark.createDataFrame(left_rows, ls),
-        spark.createDataFrame(right_rows, rs),
+        spark.createDataFrame(left_rows + left_late, ls),
+        spark.createDataFrame(right_rows + right_late, rs),
         on=["sym"],
         l_ts="ts",
         r_ts="rts",
@@ -1122,65 +1128,6 @@ def test_cms_counters_stream_matches_batch(spark, tmp_path):
     expected = {(r.j, r.bucket): r.c for r in cms_counters(df).collect()}
     assert streamed == expected
     assert sum(streamed.values()) == sum(len(t.split()) for _, t in rows) * 4
-
-
-def test_stream_stream_left_outer_emits_unmatched(spark, tmp_path):
-    """Left-outer stream-stream join (band ±30 s): matched left rows
-    carry the right payload; unmatched ones are emitted with NULLs
-    once a later file advances the watermark past their bound —
-    nothing is silently dropped, unlike the inner stage-3 join."""
-    from pyspark.sql.types import DoubleType as _D
-
-    from lab04_spark_streaming_spark.streaming.pipeline import (
-        join_streams_left_outer,
-    )
-
-    lschema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("lts", TimestampType()),
-            StructField("lval", _D()),
-        ]
-    )
-    rschema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("rts", TimestampType()),
-            StructField("tag", LongType()),
-        ]
-    )
-    lpath, rpath = str(tmp_path / "lo_l"), str(tmp_path / "lo_r")
-    # File 1: left rows at t=0..4 min; rights only for even minutes.
-    l1 = [(1, T0 + dt.timedelta(minutes=i), float(i)) for i in range(5)]
-    r1 = [(1, T0 + dt.timedelta(minutes=i), 100 + i) for i in (0, 2, 4)]
-    spark.createDataFrame(l1, lschema).coalesce(1).write.mode("append").parquet(lpath)
-    spark.createDataFrame(r1, rschema).coalesce(1).write.mode("append").parquet(rpath)
-    # File 2: far-future sentinels push both watermarks past file 1.
-    far = T0 + dt.timedelta(hours=6)
-    spark.createDataFrame([(9, far, -1.0)], lschema).coalesce(1).write.mode(
-        "append"
-    ).parquet(lpath)
-    spark.createDataFrame([(9, far, -1)], rschema).coalesce(1).write.mode(
-        "append"
-    ).parquet(rpath)
-
-    out = join_streams_left_outer(
-        file_stream(spark, lpath, lschema, max_files_per_trigger=1),
-        file_stream(spark, rpath, rschema, max_files_per_trigger=1),
-        "user_id",
-        "lts",
-        "rts",
-    )
-    memory_sink_once(out, "lo_out", "append")
-    got = {
-        (r.user_id, r.lts.minute): (r.tag)
-        for r in spark.table("lo_out").collect()
-        if r.user_id == 1
-    }
-    # Even minutes matched their tag; odd minutes emitted with NULL.
-    assert got.get((1, 0)) == 100 and got.get((1, 2)) == 102
-    assert (1, 1) in got and got[(1, 1)] is None
-    assert (1, 3) in got and got[(1, 3)] is None
 
 
 def test_ewma_tws_processor_recursion_with_stubbed_state():
